@@ -23,6 +23,13 @@ object SqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Blocks until the listener bus has delivered every event posted so far
+    * (the bus is private[spark]): a listener's counts are complete only
+    * after this, with no sleep to guess at.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Spill file under Spark's configured local dirs (`spark.local.dir`) via
     * the executor's DiskBlockManager — the same placement contract as
     * Spark's own shuffle/sort spills, so spill I/O lands on the disks the

@@ -48,12 +48,7 @@ object Marts {
     // NOTE: like aggApproxDistinct's small-scan branch, this makes the PLAN
     // SHAPE environment-dependent (plan audits must not pin this mart
     // family's exchange count); the RESULT is partition-invariant.
-    val cores = lineitem.sparkSession.sparkContext.defaultParallelism
-    val splits = lineitem.rdd.getNumPartitions
-    val fact =
-      if (splits >= cores) lineitem
-      else lineitem.repartition(math.min(cores, math.max(splits * 2, 8)))
-    fact
+    graft.operators.Scans.widenIfNarrow(lineitem)
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(customer), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))

@@ -214,15 +214,15 @@ object Aggregates {
     // splits, and the branch keeps the extra exchange out of that plan.
     // NOTE: the branch makes the PLAN SHAPE environment-dependent (it
     // reads the scan's split count and the session's parallelism at
-    // construction time, and `.rdd` forces eager physical planning), while
-    // the RESULT is partition-invariant. Plan-audit assertions must not
-    // cover this operator's exchange count for exactly that reason.
+    // construction time), while the RESULT is partition-invariant.
+    // Plan-audit assertions must not cover this operator's exchange count
+    // for exactly that reason.
     val spark = lineitem.sparkSession
     val narrow = lineitem.select(
       col("l_returnflag"), col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
     val cores = spark.sparkContext.defaultParallelism
     val src =
-      if (!fastHash && narrow.rdd.getNumPartitions < cores) narrow.repartition(cores)
+      if (!fastHash && Scans.splitCount(narrow) < cores) narrow.repartition(cores)
       else narrow
     val keyed = src.select(
       col("l_returnflag").as("return_flag"),

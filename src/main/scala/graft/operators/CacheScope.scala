@@ -228,7 +228,8 @@ object CacheScope {
     df.write.mode("overwrite")
       .option("parquet.block.size", (16 << 20).toString)
       .parquet(path)
-    val back = df.sparkSession.read.parquet(path)
+    // read back with the schema just written: inferring it again is a job
+    val back = df.sparkSession.read.schema(df.schema).parquet(path)
     reg.put(key, Staged(back, path))
     back
   }

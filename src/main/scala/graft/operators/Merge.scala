@@ -34,7 +34,7 @@ object Merge {
     */
   def loadTruncate(df: DataFrame, spark: SparkSession, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    spark.read.schema(df.schema).parquet(path)
   }
 
   /** `nan_clean` (sources/stocks.py:149-169): NaN→NULL scrubbing. */

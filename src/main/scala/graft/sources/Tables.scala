@@ -1,8 +1,12 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.Num
+import graft.operators.Scans
 
 /** Readers for the driver's synthetic tables (/root/repo/TESTDATA.md) plus
   * reference-shaped adapter views (FIXTURES.md §3): the TPC-H-ish star schema
@@ -15,8 +19,50 @@ import graft.functions.Num
   * operators reuse (partitionBy the same key ⇒ no extra exchange).
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A base table, resolved once per input identity.
+    *
+    * A bare `spark.read.parquet` infers the schema from the file footers,
+    * and that inference is a Spark job (about 0.1 s in a warm local[4]
+    * session on a 4-vCPU host) paid again on every read: a dashboard
+    * request built 1-6 of them before its action, and most of the jobs a
+    * full DAG build launched before its action were these. The schema is catalog metadata of the table, not of the query,
+    * so each session keeps one entry per path: the schema, and the
+    * [[InputIdentity]] it was inferred under. A read with an unchanged
+    * identity is handed the schema (no job); a rewritten or added file or a
+    * changed parquet setting re-infers once and replaces the entry. The
+    * physical plan is the same either way.
+    *
+    * The identity is taken BEFORE the inferring read, so a file that changes
+    * between the two leaves an entry that no longer matches (re-inferred on
+    * the next read), never one that matches files it was not inferred from.
+    * A missing path falls through to Spark's own read and its error.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val identity =
+      try InputIdentity.of(spark, path)
+      catch { case _: java.io.FileNotFoundException => return spark.read.parquet(path) }
+    val entries = resolved.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Resolved])
+    // inferring inside compute makes threads that miss on the same path
+    // together wait for one inference instead of each running its own
+    var inferred: Option[DataFrame] = None
+    val entry = entries.compute(path, (_, prev) =>
+      if (prev != null && prev.identity == identity) prev
+      else {
+        val df = spark.read.parquet(path)
+        inferred = Some(df)
+        Resolved(identity, df.schema)
+      })
+    inferred.getOrElse(spark.read.schema(entry.schema).parquet(path))
+  }
+
+  private final case class Resolved(identity: InputIdentity, schema: StructType)
+
+  // sessions weakly referenced, as in CacheScope's registry, so a stopped
+  // session's entries go with it; concurrent, because Dag.fullBuild builds
+  // models on several threads and a serving session answers several clients
+  private val resolved = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Resolved]])
 
   def region(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "nation")
@@ -50,34 +96,6 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "embeddings")
 
-  /** Widen a fact scan that is narrower than the session, keyed on the
-    * adapter's grouping columns so the downstream aggregate reuses the ONE
-    * explicit exchange (no second ENSURE_REQUIREMENTS shuffle).
-    *
-    * Rationale (r17, guide §2.2/§2.5 scan-parallelism floor): a validation-SF
-    * parquet file is a single row group, so the scan stage — and every
-    * partial aggregate pipelined into it — runs as ONE task while 31 cores
-    * idle (measured: win_volatility 1.38 s wall / 4.2 s cpu with the serial
-    * partial agg; the [[graft.models.Marts.sales]] branch is the same fix
-    * with its own measured sweep). Modest widening only (2× splits, floor 8,
-    * cap cores) for the same G1-churn reason as the sales sweep. At real
-    * scale a fact scan already has ≥ cores splits and this is a no-op, so
-    * the production plan keeps the standard partial+final aggregate.
-    * NOTE: plan SHAPE is environment-dependent (audits must not pin this
-    * family's exchange count); results are partition-invariant (keyed
-    * aggregation).
-    */
-  private def widenedByKey(spark: SparkSession, df: DataFrame,
-      keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    // spark.graft.scan.widen=false restores the historical plan — the
-    // same-JVM A/B toggle (Probe sweep) that validated this branch
-    if (spark.conf.getOption("spark.graft.scan.widen").contains("false")) return df
-    val cores = spark.sparkContext.defaultParallelism
-    val splits = df.rdd.getNumPartitions
-    if (splits >= cores) df
-    else df.repartition(math.min(cores, math.max(splits * 2, 8)), keys: _*)
-  }
-
   /** stocks.raw_prices-shaped daily series (reference sources/stocks.py:48-60):
     * one row per (ticker, trade_date), suppliers as tickers. Exact integer
     * cents per Num's cross-engine scheme. ~100 tickers × ~600 days at sf0.01.
@@ -88,12 +106,15 @@ object Tables {
     * scan task (guide §2.3: project early, shuffle narrow).
     */
   def prices(spark: SparkSession, sfDir: String): DataFrame =
-    widenedByKey(spark,
+    // widened on the grouping keys, so the aggregate below reuses the one
+    // explicit exchange instead of adding its own (r17: win_volatility ran
+    // its partial aggregate as one task, 1.38 s wall / 4.2 s cpu)
+    Scans.widenIfNarrow(
       lineitem(spark, sfDir).select(
         col("l_suppkey").as("ticker"),
         to_date(col("l_shipdate")).as("trade_date"),
         col("l_extendedprice"), col("l_quantity")),
-      Seq(col("ticker"), col("trade_date")))
+      col("ticker"), col("trade_date"))
       .groupBy(col("ticker"), col("trade_date"))
       .agg(
         sum(Num.cents(col("l_extendedprice"))).as("close_cents"),

@@ -89,7 +89,7 @@ object Warehouse {
     val df = spark.read.parquet(path)
     val tmp = path + ".compact_tmp"
     df.repartition(n).write.mode("overwrite").parquet(tmp)
-    val rows = spark.read.parquet(tmp).count()
+    val rows = spark.read.schema(df.schema).parquet(tmp).count()
     // swap: move the old dir aside, the new one in, then drop the old —
     // readers either see the old files or the new, never a half-written mix
     val old = new java.io.File(path + ".compact_old")

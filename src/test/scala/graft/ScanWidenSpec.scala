@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The r17 scan-parallelism floor (Tables.widenedByKey / operators.Scans)
+/** The r17 scan-parallelism floor (operators.Scans.widenIfNarrow)
   * must be RESULT-invariant: widening only re-lays out the rows feeding a
   * keyed aggregation, so every consumer's output is identical with the
   * branch on and off. Pinned here with the same toggle the same-JVM A/B
@@ -66,5 +66,26 @@ class ScanWidenSpec extends SparkTestBase {
       .table(spark, sf, "lineitem").repartition(8)
     val out = operators.Scans.widenIfNarrow(preWidened)
     assert(out eq preWidened)
+  }
+
+  test("the split count read from the logical plan is the planned scan's") {
+    val maxBytes = "spark.sql.files.maxPartitionBytes"
+    for (name <- Seq("lineitem", "orders", "documents", "region")) {
+      val scan = graft.sources.Tables.table(spark, sf, name)
+      val narrowed = scan.select(scan.columns.head).where(col(scan.columns.head).isNotNull)
+      for (df <- Seq(scan, narrowed, scan.coalesce(1), scan.repartition(3)))
+        assert(operators.Scans.splitCount(df) == df.rdd.getNumPartitions, name)
+    }
+    // a file cut into several splits
+    val prev = spark.conf.getOption(maxBytes)
+    spark.conf.set(maxBytes, "16k")
+    try {
+      val scan = graft.sources.Tables.table(spark, sf, "lineitem")
+      assert(scan.rdd.getNumPartitions > 1)
+      assert(operators.Scans.splitCount(scan) == scan.rdd.getNumPartitions)
+    } finally prev match {
+      case Some(v) => spark.conf.set(maxBytes, v)
+      case None => spark.conf.unset(maxBytes)
+    }
   }
 }
